@@ -14,6 +14,9 @@ from kinesis_s3_spark.sinks import emitter
 from kinesis_s3_spark.sinks.emitter import emit
 from kinesis_s3_spark.sources import replay
 from kinesis_s3_spark.sources.replay import (
+    DEFAULT_SPLIT_TARGET_BYTES,
+    ArchiveReplayStreamReader,
+    _PackedPartition,
     _plan_batch,
     register_replay_source,
 )
@@ -155,17 +158,170 @@ def test_starting_batch_id_floor(spark, tmp_path, tree):
     assert [r.batch_id for r in spark.table("replay_floor").collect()] == [1]
 
 
+def _planned(root, parallelism, split_target=None, lo=-1, hi=1):
+    options = {"path": root}
+    if split_target is not None:
+        options["splitTargetBytes"] = str(split_target)
+    reader = ArchiveReplayStreamReader(options, parallelism)
+    return reader.partitions({"batch_id": lo}, {"batch_id": hi})
+
+
 def test_partition_planning_unit(tmp_path, spark, tree):
-    """One InputPartition per gzip object; layout folded at plan time."""
+    """Read units (one per gzip object, layout folded at plan time) are
+    packed into min(units, max(parallelism, ceil(bytes / target)))
+    InputPartitions, each unit in exactly one of them, largest first
+    into the lightest partition."""
+    import math
+    import os
+
     root, _ = tree
-    parts = _plan_batch(root, 0)
-    assert len(parts) == 3
-    assert {p.row_type for p in parts} == {
+    units = _plan_batch(root, 0)
+    assert len(units) == 3
+    assert {u.row_type for u in units} == {
         "com.acme1.example1/jsonschema-2",
         "com.acme2.other/jsonschema-1",
         "unpartitioned",
     }
-    assert all(p.path.endswith(".gz") and p.batch_id == 0 for p in parts)
+    assert all(u.path.endswith(".gz") and u.batch_id == 0 for u in units)
+
+    units += _plan_batch(root, 1)
+    assert len(units) == 4
+    sizes = {u.path: os.path.getsize(u.path) for u in units}
+    total = sum(sizes.values())
+    for parallelism, target in [
+        (1, None), (2, None), (3, None), (100, None),
+        (1, 1), (1, -(-total // 2)), (2, -(-total // 3)),
+    ]:
+        parts = _planned(root, parallelism, target)
+        by_bytes = math.ceil(total / (target or DEFAULT_SPLIT_TARGET_BYTES))
+        assert len(parts) == min(len(units), max(parallelism, by_bytes))
+        planned = [u for p in parts for u in p.units]
+        assert sorted(u.path for u in planned) == sorted(sizes)
+        assert all(u.start < 0 for u in planned)  # whole objects
+        # largest-first into the lightest partition: no partition holds
+        # more than the lightest one plus one unit
+        loads = [sum(sizes[u.path] for u in p.units) for p in parts]
+        assert max(loads) - min(loads) <= max(sizes.values())
+    # the batch-id range bounds the plan: (0, 1] is batch 1 alone
+    only_1 = _planned(root, 4, lo=0, hi=1)
+    assert [(u.batch_id, u.row_type) for p in only_1 for u in p.units] == [
+        (1, "com.acme1.example1/jsonschema-2")
+    ]
+
+
+def test_replay_parity_with_read_archive(spark, tmp_path):
+    """A GZIP_INDEXED tree in the default writer layout (4 writers per
+    partition, several row types, 3 batches) replays to exactly the
+    (value, batch_id, row_type) multiset that the batch reader
+    read_archive returns, packed into min(units, defaultParallelism)
+    partitions — the session's parallelism reaches the planner worker."""
+    from collections import Counter
+
+    from kinesis_s3_spark.sources.archive import read_archive
+
+    cfg = from_dict(
+        {
+            "purpose": "SELF_DESCRIBING",
+            "input": {"stream_name": "t"},
+            "output": {
+                "s3": {
+                    "path": str(tmp_path / "out"),
+                    "compression": "GZIP_INDEXED",
+                },
+                "bad_path": str(tmp_path / "bad"),
+            },
+        }
+    )
+    for batch_id in range(3):
+        records = [
+            f'{{"schema":"iglu:com.v{i % 3}/e{i % 2}/jsonschema/1-0-{batch_id}",'
+            f'"data":{{"i":{i},"b":{batch_id}}}}}'
+            for i in range(60)
+        ] + [f"junk-{batch_id}-{i}" for i in range(5)]
+        emit(
+            spark.createDataFrame([(v,) for v in records], "value string"),
+            batch_id,
+            cfg,
+        )
+    root = str(tmp_path / "out")
+    expected = Counter(
+        tuple(r)
+        for r in read_archive(spark, root, "GZIP_INDEXED")
+        .select("value", "batch_id", "row_type")
+        .collect()
+    )
+    assert sum(expected.values()) == 3 * 65
+    assert len({rt for _v, _b, rt in expected}) > 3
+
+    n_units = sum(len(_plan_batch(root, b)) for b in range(3))
+    parallelism = spark.sparkContext.defaultParallelism
+    assert n_units > parallelism  # packing has something to do
+
+    register_replay_source(spark)
+    got, n_parts = Counter(), []
+
+    def consume(df, _batch_id):
+        n_parts.append(df.rdd.getNumPartitions())
+        got.update(tuple(r) for r in df.collect())
+
+    q = (
+        spark.readStream.format("archive_replay")
+        .option("path", root)
+        .load()
+        .writeStream.foreachBatch(consume)
+        .option("checkpointLocation", str(tmp_path / "ckpt_parity"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+        q.awaitTermination()
+    assert got == expected
+    assert n_parts == [min(n_units, parallelism)]
+
+
+def test_all_bad_batch_plans_one_noop_partition(spark, tmp_path):
+    """A batch directory with no good objects (every record of the
+    batch dead-lettered; emit() itself writes no directory then, but a
+    finished batch left with only its ``_SUCCESS`` marker looks the
+    same) plans its single empty partition; the query commits that
+    microbatch and moves on to the next batch."""
+    import os
+
+    cfg = _cfg(tmp_path)
+    root = str(tmp_path / "out")
+    os.makedirs(os.path.join(root, "batch_id=0"))
+    open(os.path.join(root, "batch_id=0", "_SUCCESS"), "w").close()
+    assert _plan_batch(root, 0) == []
+    assert _planned(root, 4, lo=-1, hi=0) == [_PackedPartition([])]
+
+    register_replay_source(spark)
+    ckpt = str(tmp_path / "ckpt_bad")
+    # requireComplete: batch 1 is written while the query runs
+    q = (
+        spark.readStream.format("archive_replay")
+        .option("path", root)
+        .option("requireComplete", "true")
+        .load()
+        .writeStream.format("memory")
+        .queryName("replay_bad")
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        assert spark.table("replay_bad").count() == 0
+        assert os.path.exists(os.path.join(ckpt, "commits", "0"))
+
+        emit(spark.createDataFrame([(SDJ[0],)], "value string"), 1, cfg)
+        q.processAllAvailable()
+    finally:
+        q.stop()
+        q.awaitTermination()
+    assert [
+        (r.value, r.batch_id) for r in spark.table("replay_bad").collect()
+    ] == [(SDJ[0], 1)]
 
 
 def _indexed_cfg(tmp_path):
